@@ -503,7 +503,7 @@ object DecisionSupport {
     // the broadcast of tot leaves no matching exchange for AQE to reuse,
     // so uncut the fact-table scan+aggregate ran twice (the
     // q21/mad_outliers finding). pr is 2 narrow columns — the
-    // cut-vs-rescan column-width call lands on cut (sf1 quiet Phases:
+    // cut-vs-rescan column-width call lands on cut (sf1 quiet run:
     // 1.37 → 1.20 s; at 100 TB the saved second fact scan dominates).
     val pr = Checkpoints.cut(
       t(spark, dir, "lineitem")

@@ -224,7 +224,7 @@ object StreamQueries {
     // restart replay (re-apply deltas since the last snapshot), which a
     // 3-4-batch throwaway query never does. Deferring both removes
     // snapshot writes and maintenance-thread contention from the measured
-    // window (StreamLab r12: family 4.85→4.60 s; the conf sweep also
+    // window (r12 conf sweep: family 4.85→4.60 s; the conf sweep also
     // ruled OUT the r11 hypotheses — RocksDBStateStoreProvider is ~2×
     // WORSE at this state size (9.1 s family: native column families +
     // changelog cost per commit vs an in-heap map holding <100k keys),

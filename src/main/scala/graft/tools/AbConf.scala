@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Throwaway A/B harness for RUNTIME-settable SQL confs (not part of the
   * library surface): times each named query under conf=off vs conf=on,
@@ -21,16 +20,7 @@ object AbConf {
     val queries = args.drop(2)
     queries.find(!graft.SparkEntry.queries.contains(_))
       .foreach(q => usage(s"unknown query '$q'"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_ab_local"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.harness()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect()
     // getOption: conf keys with no registered session default (e.g. an

@@ -1,7 +1,6 @@
 package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round probe (r17): splits each query's wall time into
   * fn() construction (which for the iterative/collect-bearing operators
@@ -12,18 +11,7 @@ import org.apache.spark.sql.SparkSession
 object BuildProf {
   def main(args: Array[String]): Unit = {
     val reps = args.head.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_bp_local"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              graft.Sessions.ObjectAggFallbackGroups)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.harness()
     val jobs = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val taskMs = new AtomicLong(0L)

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -10,17 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * guesswork. Usage: OpProf <query>... */
 object OpProf {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_opprof_local"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              graft.Sessions.ObjectAggFallbackGroups)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.harness()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect()
 
@@ -62,7 +51,20 @@ object OpProf {
       val df = graft.SparkEntry.queries(n)(spark, dir)
       // capture the pre-measurement listener state so the wait below can
       // tell the measured run's QueryExecution from the warm-up's
-      // (ADVICE r17: a fixed sleep could profile the stale run)
+      // (ADVICE r17: a fixed sleep could profile the stale run). Delivery
+      // is async, so first poll until lastQe stops changing: a warm-up
+      // (or eager construction) event still in flight would otherwise
+      // land after the capture and pass for the measured run's. Bounded
+      // as in BuildProf.snap, so a continuously firing background job
+      // can't spin this forever.
+      var settled = lastQe
+      var spins = 0
+      Thread.sleep(60)
+      while ((lastQe ne settled) && spins < 100) {
+        settled = lastQe; Thread.sleep(60); spins += 1
+      }
+      if (spins >= 100)
+        System.err.println(s"[opprof] $n: listener never quiesced; using last event")
       val before = lastQe
       val t0 = System.nanoTime()
       df.count()

@@ -1,14 +1,14 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Checked-in plan artifact (VERDICT r6 item 8): dumps the FORMATTED
  * physical plan of every gated query at sf0.001 to `docs/PLANS.md`, so a
  * judge can audit plan shapes (exchanges, pushed filters, codegen spans,
- * join strategies) without running Spark. Expression IDs and local paths
- * are normalized out so regenerated dumps diff cleanly.
+ * join strategies) without running Spark. Expression IDs, local paths
+ * and JVM object identities are normalized out so regenerated dumps
+ * are byte-identical.
  *
  * Regenerate after plan-affecting changes:
  *   sbt "runMain graft.tools.PlanDump"
@@ -20,20 +20,17 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.harness(8)
 
     def normalize(plan: String): String = plan
       .replaceAll("#\\d+L?", "#x")             // expression IDs
       .replaceAll("file:[^\\s,\\]\\)]+", "file:<path>") // local paths
       .replaceAll("plan_id=\\d+", "plan_id=x")
       .replaceAll("Statistics\\([^)]*\\)", "Statistics(<elided>)")
+      // JVM identities of captured arrays and lambdas ([[D@1b2c3d4e,
+      // Foo$$$Lambda$6131/0x00007f...@2892ce86) differ on every run
+      .replaceAll("\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$Lambda")
+      .replaceAll("([\\w$;\\[]+)@[0-9a-f]{1,8}\\b", "$1@x")
 
     val sb = new StringBuilder
     sb.append("# Physical plans of every gated query (sf0.001)\n\n")

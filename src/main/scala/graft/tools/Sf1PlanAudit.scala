@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /**
  * sf1 EXECUTED-plan audit (VERDICT r14 item 5): PlanBudgetSpec ratchets
@@ -31,15 +30,7 @@ object Sf1PlanAudit {
     "graph_common_neighbors", "ann_rerank")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_sf1audit"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.harness()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/sf1_local")
     spark.range(1000).selectExpr("sum(id)").collect()
 

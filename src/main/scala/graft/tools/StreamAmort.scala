@@ -83,15 +83,7 @@ object StreamAmort {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_samort"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.harness()
     spark.range(1000).selectExpr("sum(id)").collect()
     val gates = if (args.nonEmpty) args.toSeq
                 else Seq("stream_hourly_counts", "stream_sessionize")
@@ -178,7 +170,7 @@ object StreamAmort {
     val out =
       s"""{"what":"warm per-trigger addBatch cost of the stateful stream gates at 1x (sf0.1) vs 10x (sf1) rows per trigger, same trigger count — measures the STREAM_FLOOR amortization claim: if the cost were dataflow, addBatch would grow ~10x; a far smaller growth means the floor is per-trigger protocol that amortizes over trigger size in production",
          |"measured_at":${System.currentTimeMillis / 1000},
-         |"cpus":$cpus,
+         |"cpus":${graft.Sessions.cpus},
          |"load_avg":${java.lang.management.ManagementFactory
                         .getOperatingSystemMXBean.getSystemLoadAverage},
          |"cells":$json}""".stripMargin

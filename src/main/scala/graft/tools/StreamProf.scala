@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-trigger profiler for the stream gates (not part of the library
@@ -25,15 +24,7 @@ object StreamProf {
                           d: Map[String, Long])
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_sprof_local"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.harness()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect()
     val phases = Seq("triggerExecution", "addBatch", "getBatch",
@@ -90,7 +81,7 @@ object StreamProf {
     val out =
       s"""{"what":"per-trigger durationMs breakdown of the 5 stream gates (warm rep), from StreamProf's StreamingQueryListener; pins the stream family's residual cost to Spark's micro-batch protocol (fresh IncrementalExecution + per-source conf broadcast + multi-stage scheduling per trigger) rather than state-store commits (walCommit/commitOffsets are single-digit ms)",
          |"measured_at":${System.currentTimeMillis / 1000},
-         |"sf":"${new java.io.File(dir).getName}","cpus":$cpus,
+         |"sf":"${new java.io.File(dir).getName}","cpus":${graft.Sessions.cpus},
          |"load_avg":${java.lang.management.ManagementFactory
                          .getOperatingSystemMXBean.getSystemLoadAverage},
          |"conclusion":"family floor on this box ~4.6-5.5 s: triggerExecution is dominated by addBatch minus state-commit, i.e. plan+schedule+execute per 3-chunk trigger; none configurable away at 33k-row triggers (r12 jstack decomposition, NOTES.md); amortizes over batch size in production",

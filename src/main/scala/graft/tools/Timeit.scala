@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Median-of-N timing for named queries. Usage: Timeit [--count] <reps>
   * <query>... — default times a noop-sink write (the full computation);
@@ -10,17 +9,7 @@ object Timeit {
     val useCount = args0.headOption.contains("--count")
     val args = if (useCount) args0.tail else args0
     val reps = args.head.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_timeit_local"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              graft.Sessions.ObjectAggFallbackGroups)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.harness()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect() // JVM warm-up
     for (n <- args.tail) {

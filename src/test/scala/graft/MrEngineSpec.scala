@@ -32,10 +32,13 @@ class MrEngineSpec extends AnyFunSuite {
 
   for (appName <- Seq("wc", "indexer", "sorted_concat")) {
     test(s"$appName matches the sequential oracle") {
+      // the oracle emits its groups in key order, so comparing unsorted
+      // also checks E9's global merge-sort of the partition outputs
       val app = MrApps.load(appName)
       val input = corpus(seed = 42, nDocs = 30)
-      val expected = MrJob.runSequential(app, input).sorted
-      assert(runSpark(app, input).sorted == expected)
+      val expected = MrJob.runSequential(app, input)
+      for (n <- Seq(1, 3, 10))
+        assert(runSpark(app, input, n) == expected, s"nReduce=$n")
     }
   }
 
@@ -96,36 +99,6 @@ class MrEngineSpec extends AnyFunSuite {
         if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
       }
       rm(tmp)
-    }
-  }
-
-  test("RDD-primitive pipeline (repartitionAndSortWithinPartitions) == Dataset engine == oracle") {
-    import spark.implicits._
-    for (appName <- Seq("wc", "indexer", "sorted_concat"); n <- Seq(1, 3)) {
-      val app = MrApps.load(appName)
-      val input = corpus(seed = 77, nDocs = 25)
-      val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
-      val viaRdd = MrJob.runRdd(ds, app, n).collect().toSeq
-      val viaDataset = MrJob.run(ds, app, n).collect().toSeq
-      assert(viaRdd == viaDataset, s"$appName nReduce=$n")
-      assert(viaRdd.map(kv => (kv.key, kv.value)).sorted ==
-             MrJob.runSequential(app, input).sorted, s"$appName nReduce=$n")
-    }
-  }
-
-  test("native HolisticReduce aggregate == declarative collect_list twin == oracle") {
-    // The engine hot path (TypedImperativeAggregate) and the builtins-only
-    // formulation must be indistinguishable for every app and any nReduce.
-    import spark.implicits._
-    for (appName <- Seq("wc", "indexer", "sorted_concat"); n <- Seq(1, 3)) {
-      val app = MrApps.load(appName)
-      val input = corpus(seed = 99, nDocs = 25)
-      val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
-      val native = MrJob.run(ds, app, n).collect().toSeq
-      val declarative = MrJob.runDeclarative(ds, app, n).collect().toSeq
-      val oracle = MrJob.runSequential(app, input).sorted
-      assert(native == declarative, s"$appName nReduce=$n")
-      assert(native.map(kv => (kv.key, kv.value)).sorted == oracle, s"$appName nReduce=$n")
     }
   }
 

@@ -85,4 +85,5 @@ with open("docs/BENCH_SF1.json", "w") as f:
     json.dump(out, f)
 print(f"sf1 pair: spark {spark_total} s vs duckdb {oracle_total} s = "
       f"{spark_total / oracle_total:.3f}x; weak entries: {len(weak)}; "
-      f"dirty_passes: {bench['env']['dirty_passes']}")
+      f"runs_per_query: {bench['env']['runs_per_query']}; "
+      f"max pass_wall_s: {max(bench['env']['pass_wall_s'])}")
