@@ -171,9 +171,6 @@ object Dedup {
     sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
   }
 
-  private def signaturesWide(spark: SparkSession, dir: String): DataFrame =
-    signaturesWideOf(t(spark, dir, "documents"))
-
   /** Banded signatures computed ROW-LOCALLY — bit-identical to
     * [[bandedSignaturesOf]] (same md5-derived hash family, same min over
     * the same shingle multiset: min of a set is insensitive to the
@@ -235,9 +232,6 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
-  private def bandedSignatures(spark: SparkSession, dir: String): DataFrame =
-    bandedSignaturesOf(t(spark, dir, "documents"))
-
   /** Oracle CTE body (no leading WITH) ending in `bands(doc_id, band,
     * sig)`, over any source relation `src(doc_id, text)`. */
   private def bandedSignaturesCtesFrom(src: String): String =
@@ -275,8 +269,8 @@ object Dedup {
     * bucket's doc list, explode its i<j pairs) rather than a self-join —
     * the signature pipeline runs ONCE instead of once per join side, and
     * only multi-occupant buckets produce any downstream rows. Buckets
-    * beyond [[MaxBucketDocs]] are dropped (see its doc). */
-  /** [[dedupMinhashLsh]] over any corpus with (doc_id, text). */
+    * beyond [[MaxBucketDocs]] are dropped (see its doc). Over any corpus
+    * with (doc_id, text); [[dedupMinhashLsh]] runs it on the documents. */
   private[operators] def minhashPairsOf(docs: DataFrame): DataFrame =
     minhashPairsFromBanded(bandedSignaturesOf(docs))
 
@@ -374,6 +368,15 @@ object Dedup {
   private[operators] val minhashPairsCtes: String =
     "WITH " + minhashPairsCtesFrom("documents")
 
+  /** [[minhashPairsCtesFrom]] plus the symmetric `edges(doc_a, doc_b)` —
+    * the oracle twin of [[Graph.undirected]], shared by the components
+    * and graph oracles. */
+  private[operators] def minhashEdgesCtesFrom(src: String): String =
+    s"""${minhashPairsCtesFrom(src)},
+       |edges AS (
+       |  SELECT doc_a, doc_b FROM pairs
+       |  UNION ALL SELECT doc_b, doc_a FROM pairs)""".stripMargin
+
   val dedupMinhashLshSql: String =
     s"""$minhashPairsCtes
        |SELECT doc_a, doc_b FROM pairs""".stripMargin
@@ -402,9 +405,7 @@ object Dedup {
   private[operators] def componentsOf(pairs: DataFrame): DataFrame = {
     // LAZY cut: the first round's action below materializes it once;
     // every later round reads the persisted blocks.
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))),
-      eager = false)
+    val edges = Checkpoints.cut(Graph.undirected(pairs), eager = false)
     // No cut and no priming action on the initial label table (r18): its
     // consumers are the first round's join + union inside ONE
     // action, and the duplicated distinct subtree is deduplicated by
@@ -457,10 +458,7 @@ object Dedup {
     * per node — the fixpoint label propagation converges to exactly this.
     * Over any source relation; the caller's WITH must say RECURSIVE. */
   private[operators] def componentsCtesFrom(src: String): String =
-    s"""${minhashPairsCtesFrom(src)},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+    s"""${minhashEdgesCtesFrom(src)},
        |reach AS (
        |  SELECT doc_a AS doc_id, doc_a AS r FROM edges
        |  UNION
@@ -658,7 +656,7 @@ object Dedup {
     * Derived row-wise from the wide signature — the minhash aggregate is
     * the only shuffle. */
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    signaturesWide(spark, dir)
+    signaturesWideOf(t(spark, dir, "documents"))
       .select(col("doc_id"),
               concat_ws(";", (0 until NumHashes / RowsPerBand).map(bandSig): _*)
                 .as("signature"))

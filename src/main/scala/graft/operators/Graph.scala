@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
 
@@ -38,13 +38,24 @@ object Graph {
   /** Damping factor 0.85 in micro-units. */
   private val Damp = 850000L
 
+  /** The symmetric edge list of an undirected pair list (doc_a, doc_b,
+    * extra...): every pair once as given and once with its endpoints
+    * swapped, extra columns (SSSP's weight) riding along unchanged. The
+    * one edge builder of every graph operator and of the CC loop
+    * ([[Dedup.componentsOf]]); its oracle twin is
+    * [[Dedup.minhashEdgesCtesFrom]]. Each caller keeps its own lineage-
+    * cut policy. */
+  private[operators] def undirected(pairs: DataFrame): DataFrame = {
+    val extra = pairs.columns.filterNot(Set("doc_a", "doc_b")).map(col)
+    pairs.union(pairs.select(
+      col("doc_b").as("doc_a") +: col("doc_a").as("doc_b") +: extra.toSeq: _*))
+  }
+
   /** PageRank over the undirected LSH candidate graph: nodes are the
     * documents appearing in any candidate pair, every edge runs both
     * ways. Returns (doc_id, deg, pr) with pr in micro-units. */
   def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.dedupMinhashLsh(spark, dir)
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val edges = Checkpoints.cut(undirected(Dedup.dedupMinhashLsh(spark, dir)))
     val deg = Checkpoints.cut(
       edges.groupBy(col("doc_a").as("doc_id")).agg(count(lit(1)).as("deg")))
     var pr = deg.withColumn("pr", lit(PrOne))
@@ -78,10 +89,7 @@ object Graph {
          |    SELECT e.doc_b AS doc_id, CAST(SUM(p.pr // p.deg) AS BIGINT) AS c
          |    FROM edges e JOIN it${k - 1} p ON p.doc_id = e.doc_a
          |    GROUP BY 1) s ON s.doc_id = d.doc_id)""".stripMargin
-    s"""${Dedup.minhashPairsCtes},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+    s"""WITH ${Dedup.minhashEdgesCtesFrom("documents")},
        |deg AS (
        |  SELECT doc_a AS doc_id, COUNT(*) AS deg FROM edges GROUP BY 1),
        |it0 AS (SELECT doc_id, deg, CAST($PrOne AS BIGINT) AS pr FROM deg),
@@ -96,54 +104,62 @@ object Graph {
    * similar triple, and high triangle counts mark dense clone clusters
    * (where pairwise transitivity holds) versus chains (where it
    * doesn't — a classic dedup-quality diagnostic).
-   *
-   * Shape: the canonical two-join node-iterator on the a<b<c ordered
-   * edge list — each triangle materializes exactly ONCE (ordering is
-   * the standard 6× dedup trick), then each corner credits its three
-   * nodes via one explode. Both joins are equi-joins on document ids;
-   * the heavy intermediate is the wedge set, which the a<b<c constraint
-   * already halves. (At web scale you'd orient edges by degree instead
-   * of id — same plan shape, smaller wedge set.)
    */
-  def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
-    val e = Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir)
-      .select(col("doc_a"), col("doc_b")))
-    val wedges = e.as("e1")
-      .join(e.as("e2"), col("e1.doc_b") === col("e2.doc_a"))
+  def graphTriangles(spark: SparkSession, dir: String): DataFrame =
+    trianglesPerNode(Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir)))
+
+  /** Per-node triangle count (doc_id, n_triangles) over a canonical
+    * (doc_a < doc_b) pair list — shared by [[graphTriangles]] and
+    * [[graphClusteringCoeff]].
+    *
+    * Shape: the canonical two-join node-iterator on the a<b<c ordered
+    * edge list — each triangle materializes exactly ONCE (ordering is
+    * the standard 6× dedup trick), then each corner credits its three
+    * nodes via one explode. Both joins are equi-joins on document ids;
+    * the heavy intermediate is the wedge set, which the a<b<c constraint
+    * already halves. (At web scale you'd orient edges by degree instead
+    * of id — same plan shape, smaller wedge set.) */
+  private def trianglesPerNode(half: DataFrame): DataFrame = {
+    val wedges = half.as("e1")
+      .join(half.as("e2"), col("e1.doc_b") === col("e2.doc_a"))
       .select(col("e1.doc_a").as("a"), col("e1.doc_b").as("b"),
               col("e2.doc_b").as("c"))
-    val tris = wedges
-      .join(e.as("e3"), col("a") === col("e3.doc_a") && col("c") === col("e3.doc_b"))
-      .select(col("a"), col("b"), col("c"))
-    tris
+    wedges
+      .join(half.as("e3"), col("a") === col("e3.doc_a") && col("c") === col("e3.doc_b"))
       .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_triangles"))
   }
 
+  /** Oracle twin of [[trianglesPerNode]] over the `pairs` CTE, ending in
+    * `pn(doc_id, n_triangles)`. */
+  private val trianglesPerNodeCtes: String =
+    """w AS (
+      |  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
+      |  FROM pairs e1 JOIN pairs e2 ON e1.doc_b = e2.doc_a),
+      |tri AS (
+      |  SELECT a, b, c FROM w JOIN pairs e3 ON w.a = e3.doc_a AND w.c = e3.doc_b),
+      |pn AS (
+      |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
+      |    SELECT a AS doc_id FROM tri
+      |    UNION ALL SELECT b FROM tri
+      |    UNION ALL SELECT c FROM tri) GROUP BY 1)""".stripMargin
+
   val graphTrianglesSql: String =
     s"""${Dedup.minhashPairsCtes},
-       |w AS (
-       |  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
-       |  FROM pairs e1 JOIN pairs e2 ON e1.doc_b = e2.doc_a),
-       |tri AS (
-       |  SELECT a, b, c FROM w JOIN pairs e3 ON w.a = e3.doc_a AND w.c = e3.doc_b),
-       |corners AS (
-       |  SELECT a AS doc_id FROM tri
-       |  UNION ALL SELECT b FROM tri
-       |  UNION ALL SELECT c FROM tri)
-       |SELECT doc_id, COUNT(*) AS n_triangles
-       |FROM corners GROUP BY 1""".stripMargin
+       |$trianglesPerNodeCtes
+       |SELECT doc_id, n_triangles FROM pn""".stripMargin
 
-  // -------------------------------------------------------------- graph_bfs
+  // ------------------------------------------------------ graph_bfs / sssp
 
-  /** BFS depth bound: hop distances beyond this are cut off (a web-scale
-    * deployment bounds its frontier the same way). */
-  private val BfsMaxHops = 4
+  /** Hop bound of BFS and SSSP: distances and costs are minimized over
+    * paths of at most this many edges (a web-scale deployment bounds its
+    * frontier the same way). */
+  private val MaxHops = 4
 
   /** Seed rule: every node whose doc_id is divisible by this — a
     * deterministic multi-source seed set spread across the graph. */
-  private val BfsSeedMod = 50L
+  private val SeedMod = 50L
 
   /**
    * Multi-source BFS hop distance over the near-dup similarity graph
@@ -152,71 +168,40 @@ object Graph {
    * runs when a set of documents is flagged (benchmark leaks, takedowns)
    * and everything within k near-dup hops must be reviewed.
    *
-   * Scale shape: textbook semi-naive frontier expansion — each round is
-   * ONE equi-join of the edge list against the current frontier plus one
-   * anti-join against the visited set, so the shuffled data is
-   * proportional to the frontier, never the graph; rounds are a fixed
-   * unroll (no per-round driver action), with [[Checkpoints.cut]]
-   * keeping the visited-set lineage flat (and durable under the reliable-
-   * checkpoint flag). The oracle is DuckDB's semi-naive recursive CTE —
-   * the same algorithm in the other paradigm, a cross-engine
-   * differential of the whole iteration, like `dedup_components`.
+   * Scale shape: BFS is unit-weight [[ssspOf]] — a semi-naive frontier
+   * expansion whose rounds each join the edge list against only the
+   * newly reached nodes, so the shuffled data is proportional to the
+   * frontier, never the graph. The oracle is DuckDB's semi-naive
+   * recursive CTE over hop counts — the same algorithm in the other
+   * paradigm, a cross-engine differential of the whole iteration, like
+   * `dedup_components`.
    */
   def graphBfs(spark: SparkSession, dir: String): DataFrame =
     bfsOf(Dedup.dedupMinhashLsh(spark, dir))
 
-  /** The BFS loop over any undirected pair list (doc_a, doc_b) —
-    * factored for direct testing on crafted graphs, like
-    * [[Dedup.componentsOf]]. Seeds are the nodes divisible by
-    * [[BfsSeedMod]]; distances are cut at [[BfsMaxHops]]. */
-  private[operators] def bfsOf(pairs: DataFrame): DataFrame = {
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
-    // no cut on the seed table (r18): its two round-1 consumers (the
-    // visited side of the merge and the initial frontier) are the same
-    // subtree inside ONE action, so exchange reuse already computes the
-    // seed distinct once — the cut bought a Catalyst-planned action.
-    val seeds = edges.select(col("doc_a").as("doc_id")).distinct()
-      .filter(pmod(col("doc_id"), lit(BfsSeedMod)) === 0)
-    var dist = seeds.withColumn("dist", lit(0))
-    var frontier = dist.select(col("doc_id"))
-    for (r <- 1 to BfsMaxHops) {
-      // ONE cut and ONE aggregate per round (r18): the old form ran
-      // frontier-expand → distinct → anti-join → cut, then union → cut —
-      // two Catalyst-planned actions and three exchanges per round of
-      // dataflow, with ~95% of this family's wall time per-action fixed
-      // cost (BuildProf r17). Instead the raw neighbor expansion streams
-      // into the SAME min-aggregate that merges the visited set: a
-      // visited node carries its dist on both columns, a reached node
-      // carries (r, null) — min(d) is the new dist (visited dists are
-      // all < r, so a visited node keeps its dist), min(old) witnesses
-      // prior membership (null ⇔ newly reached ⇔ next frontier). The
-      // neighbor distinct() collapses inside the aggregate, map-side
-      // combined. Row-for-row identical to union(dist, reached ∖ dist).
-      val reached = edges.join(frontier, edges("doc_a") === frontier("doc_id"))
-        .select(col("doc_b").as("doc_id"), lit(r).as("d"),
-                lit(null).cast("int").as("old"))
-      // LAZY: both consumers (next round's visited side + frontier) run
-      // inside the next single action, which materializes the cut once
-      val merged = Checkpoints.cut(
-        dist.select(col("doc_id"), col("dist").as("d"), col("dist").as("old"))
-          .union(reached)
-          .groupBy(col("doc_id"))
-          .agg(min(col("d")).as("dist"), min(col("old")).as("settled"))
-          .select(col("doc_id"), col("dist"),
-                  col("settled").isNull.as("isnew")),
-        eager = false)
-      dist = merged.select(col("doc_id"), col("dist"))
-      frontier = merged.filter(col("isnew")).select(col("doc_id"))
-    }
-    dist.select(col("doc_id"), col("dist").cast("int").as("dist"))
-  }
+  /** Hop distances over any undirected pair list (doc_a, doc_b), as
+    * [[ssspOf]] with every edge costing 1: a node's cost then improves
+    * exactly when it is first reached, so round r's frontier holds
+    * exactly the nodes at hop distance r−1 — the BFS frontier. */
+  private[operators] def bfsOf(pairs: DataFrame): DataFrame =
+    ssspOf(pairs, lit(1L))
+      .select(col("doc_id"), col("cost").cast("int").as("dist"))
 
-  // ------------------------------------------------------------- graph_sssp
-
-  /** Relaxation-round bound: costs are minimized over paths of at most
-    * this many edges (the same frontier bound BFS uses). */
-  private val SsspMaxHops = 4
+  /** Oracle: BFS kept as its own hop-count recursive CTE — the reference
+    * the unit-weight relaxation loop is checked against. */
+  val graphBfsSql: String =
+    s"""WITH RECURSIVE ${Dedup.minhashEdgesCtesFrom("documents")},
+       |seeds AS (
+       |  SELECT DISTINCT doc_a AS doc_id FROM edges
+       |  WHERE doc_a % $SeedMod = 0),
+       |walk(doc_id, dist) AS (
+       |  SELECT doc_id, 0 AS dist FROM seeds
+       |  UNION
+       |  SELECT e.doc_b, w.dist + 1
+       |  FROM walk w JOIN edges e ON e.doc_a = w.doc_id
+       |  WHERE w.dist < $MaxHops)
+       |SELECT doc_id, CAST(MIN(dist) AS INT) AS dist
+       |FROM walk GROUP BY 1""".stripMargin
 
   /**
    * Multi-source WEIGHTED shortest paths over the near-dup similarity
@@ -240,31 +225,35 @@ object Graph {
   def graphSssp(spark: SparkSession, dir: String): DataFrame =
     ssspOf(Dedup.minhashWeightedPairsOf(t(spark, dir, "documents")))
 
-  /** The bounded-relaxation loop over any weighted undirected pair list
-    * (doc_a, doc_b, n_bands) — factored for direct testing on crafted
-    * graphs, like [[bfsOf]]. Seeds are the nodes divisible by
-    * [[BfsSeedMod]]. */
-  private[operators] def ssspOf(wpairs: DataFrame): DataFrame = {
-    val w = (lit(5L) - col("n_bands")).as("w")
+  /** The bounded-relaxation loop over any undirected pair list with edge
+    * cost `w` (default: the LSH weight over (doc_a, doc_b, n_bands)) —
+    * factored for direct testing on crafted graphs, like
+    * [[Dedup.componentsOf]]. Seeds are the nodes divisible by
+    * [[SeedMod]]. Rounds are a fixed unroll of [[MaxHops]] with no
+    * per-round driver action; [[Checkpoints.cut]] keeps the settled-
+    * table lineage flat (and durable under the reliable-checkpoint
+    * flag). */
+  private[operators] def ssspOf(pairs: DataFrame,
+                                w: Column = lit(5L) - col("n_bands")): DataFrame = {
     val edges = Checkpoints.cut(
-      wpairs.select(col("doc_a"), col("doc_b"), w)
-        .union(wpairs.select(col("doc_b").as("doc_a"),
-                             col("doc_a").as("doc_b"), w)))
-    // no cut on the seed table — same round-1 exchange-reuse argument as
-    // [[bfsOf]]
+      undirected(pairs.select(col("doc_a"), col("doc_b"), w.as("w"))))
+    // no cut on the seed table (r18): its two round-1 consumers (the
+    // settled side of the merge and the initial frontier) are the same
+    // subtree inside ONE action, so exchange reuse already computes the
+    // seed distinct once — the cut bought a Catalyst-planned action.
     val seeds = edges.select(col("doc_a").as("doc_id")).distinct()
-      .filter(pmod(col("doc_id"), lit(BfsSeedMod)) === 0)
+      .filter(pmod(col("doc_id"), lit(SeedMod)) === 0)
     var dist = seeds.withColumn("cost", lit(0L))
     var frontier = dist
-    for (_ <- 1 to SsspMaxHops) {
-      // ONE cut and ONE aggregate per round (r18, the bfsOf merge applied
-      // to weighted relaxation): the old form ran relax → min-aggregate →
-      // left-join+filter → cut, then union → re-aggregate → cut — two
-      // Catalyst-planned actions and three exchanges per round, ~95% of
-      // wall time per-action fixed cost (BuildProf r17). Instead the raw
-      // relaxations stream into the SAME min-aggregate that merges the
-      // settled table: a settled node carries its cost on both columns, a
-      // relaxation carries (cost + w, null) — min(c) is the new settled
+    for (_ <- 1 to MaxHops) {
+      // ONE cut and ONE aggregate per round (r18): the old form ran
+      // relax → min-aggregate → left-join+filter → cut, then union →
+      // re-aggregate → cut — two Catalyst-planned actions and three
+      // exchanges per round, ~95% of wall time per-action fixed cost
+      // (BuildProf r17). Instead the raw relaxations stream into the
+      // SAME min-aggregate that merges the settled table: a settled node
+      // carries its cost on both columns, a relaxation carries
+      // (cost + w, null) — min(c) is the new settled
       // cost (integer min is associative, so this equals the old
       // candidate-min-then-union-min), min(old) recovers the prior
       // settled cost (null ⇔ new node). improved ⇔ new or the round beat
@@ -298,13 +287,13 @@ object Graph {
        |  SELECT doc_b, doc_a, CAST(5 - n_bands AS BIGINT) AS w FROM wpairs),
        |seeds AS (
        |  SELECT DISTINCT doc_a AS doc_id FROM edges
-       |  WHERE doc_a % $BfsSeedMod = 0),
+       |  WHERE doc_a % $SeedMod = 0),
        |walk(doc_id, cost, hops) AS (
        |  SELECT doc_id, CAST(0 AS BIGINT) AS cost, 0 AS hops FROM seeds
        |  UNION
        |  SELECT e.doc_b, w.cost + e.w, w.hops + 1
        |  FROM walk w JOIN edges e ON e.doc_a = w.doc_id
-       |  WHERE w.hops < $SsspMaxHops)
+       |  WHERE w.hops < $MaxHops)
        |SELECT doc_id, CAST(MIN(cost) AS BIGINT) AS cost
        |FROM walk GROUP BY 1""".stripMargin
 
@@ -350,8 +339,7 @@ object Graph {
     * per round, the r17 BuildProf finding: ~95% of this family's wall
     * time is per-action fixed cost) bought nothing. */
   private[operators] def lpaLabelsOf(pairs: DataFrame): DataFrame = {
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val edges = Checkpoints.cut(undirected(pairs))
     var lab = edges.select(col("doc_a").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
     for (_ <- 1 to LpaIters) {
@@ -412,8 +400,13 @@ object Graph {
   /** The peeling loop over any undirected pair list (doc_a, doc_b) —
     * factored for direct testing on crafted graphs. */
   private[operators] def kcoreOf(pairs: DataFrame): DataFrame = {
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val edges = Checkpoints.cut(undirected(pairs))
+    // every alive node's degree in the subgraph the alive set induces
+    def degreeIn(alive: DataFrame): DataFrame = edges
+      .join(alive.select(col("doc_id").as("doc_a")), "doc_a")
+      .join(alive.select(col("doc_id").as("doc_b")), "doc_b")
+      .groupBy(col("doc_a").as("doc_id"))
+      .agg(count(lit(1)).as("deg"))
     var alive = edges.select(col("doc_a").as("doc_id")).distinct()
     for (_ <- 1 to KcoreRounds) {
       // LAZY cut (r18): the peel's two consumers of the alive set (both
@@ -421,49 +414,33 @@ object Graph {
       // the lazy checkpoint materializes once on first compute and is
       // reused — one materialization job per peel saved. Measured r17
       // (lazyCuts A/B, this query): −11% sf0.1 / −5% sf1.
-      val deg = Checkpoints.cut(edges
-        .join(alive.select(col("doc_id").as("doc_a")), "doc_a")
-        .join(alive.select(col("doc_id").as("doc_b")), "doc_b")
-        .groupBy(col("doc_a").as("doc_id"))
-        .agg(count(lit(1)).as("deg")),
-        eager = false)
-      alive = deg.filter(col("deg") >= KcoreK).select(col("doc_id"))
+      alive = Checkpoints.cut(degreeIn(alive), eager = false)
+        .filter(col("deg") >= KcoreK).select(col("doc_id"))
     }
     // final degree re-measured in the surviving subgraph, so the output
     // is self-consistent: every reported deg counts only co-survivors
-    edges
-      .join(alive.select(col("doc_id").as("doc_a")), "doc_a")
-      .join(alive.select(col("doc_id").as("doc_b")), "doc_b")
-      .groupBy(col("doc_a").as("doc_id"))
-      .agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= KcoreK)
+    degreeIn(alive).filter(col("deg") >= KcoreK)
   }
 
   /** Oracle: identical synchronous peels as unrolled CTEs. */
   val graphKcoreSql: String = {
-    def peel(k: Int): String =
+    // deg$k: degrees in the subgraph induced by alive${k - 1}
+    def deg(k: Int): String =
       s"""deg$k AS (
          |  SELECT e.doc_a AS doc_id, COUNT(*) AS c
          |  FROM edges e
          |  JOIN alive${k - 1} a ON a.doc_id = e.doc_a
          |  JOIN alive${k - 1} b ON b.doc_id = e.doc_b
-         |  GROUP BY 1),
-         |alive$k AS (SELECT doc_id FROM deg$k WHERE c >= $KcoreK)"""
-        .stripMargin
-    s"""WITH ${Dedup.minhashPairsCtesFrom("documents")},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |  GROUP BY 1)""".stripMargin
+    def peel(k: Int): String =
+      s"${deg(k)},\nalive$k AS (SELECT doc_id FROM deg$k WHERE c >= $KcoreK)"
+    val fin = KcoreRounds + 1
+    s"""WITH ${Dedup.minhashEdgesCtesFrom("documents")},
        |alive0 AS (SELECT DISTINCT doc_a AS doc_id FROM edges),
        |${(1 to KcoreRounds).map(peel).mkString(",\n")},
-       |fin AS (
-       |  SELECT e.doc_a AS doc_id, COUNT(*) AS deg
-       |  FROM edges e
-       |  JOIN alive$KcoreRounds a ON a.doc_id = e.doc_a
-       |  JOIN alive$KcoreRounds b ON b.doc_id = e.doc_b
-       |  GROUP BY 1)
-       |SELECT doc_id, CAST(deg AS BIGINT) AS deg
-       |FROM fin WHERE deg >= $KcoreK""".stripMargin
+       |${deg(fin)}
+       |SELECT doc_id, CAST(c AS BIGINT) AS deg
+       |FROM deg$fin WHERE c >= $KcoreK""".stripMargin
   }
 
   /** One synchronous LPA round as unrolled CTEs — the argmax vote is
@@ -483,10 +460,7 @@ object Graph {
   /** The shared LPA preamble: pairs CTEs + symmetric edges + seed labels
     * + [[LpaIters]] unrolled rounds (final labels are `lab$LpaIters`). */
   private def lpaCtes: String =
-    s"""${Dedup.minhashPairsCtesFrom("documents")},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+    s"""${Dedup.minhashEdgesCtesFrom("documents")},
        |lab0 AS (SELECT DISTINCT doc_a AS doc_id, doc_a AS label FROM edges),
        |${(1 to LpaIters).map(lpaRoundSql).mkString(",\n")}""".stripMargin
 
@@ -534,9 +508,7 @@ object Graph {
     // also computed the community-size aggregate + join only to discard
     // it, then cut the selection a second time (r18).
     val lab = lpaLabelsOf(pairs)
-    val edges = pairs.union(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val deg = edges.groupBy(col("doc_a").as("doc_id"))
+    val deg = undirected(pairs).groupBy(col("doc_a").as("doc_id"))
       .agg(count(lit(1)).as("deg"))
     val m = pairs.agg(count(lit(1)).as("m"))
     val eIn = pairs
@@ -614,9 +586,7 @@ object Graph {
    * beyond the edge list itself.
    */
   def graphAssortativity(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir))
-    val edges = pairs.union(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val edges = undirected(Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir)))
     val deg = edges.groupBy(col("doc_a").as("doc_id"))
       .agg(count(lit(1)).as("deg"))
     // No broadcast hints: the degree table is NODE-count-sized (the LSH
@@ -640,10 +610,7 @@ object Graph {
   }
 
   val graphAssortativitySql: String =
-    s"""WITH ${Dedup.minhashPairsCtesFrom("documents")},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+    s"""WITH ${Dedup.minhashEdgesCtesFrom("documents")},
        |deg AS (SELECT doc_a AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg
        |        FROM edges GROUP BY 1),
        |mo AS (
@@ -660,23 +627,6 @@ object Graph {
        |                  / CAST(m_directed * sum_x2 - sum_x * sum_x AS DOUBLE), 6)
        |  END AS assortativity
        |FROM mo""".stripMargin
-
-  val graphBfsSql: String =
-    s"""WITH RECURSIVE ${Dedup.minhashPairsCtesFrom("documents")},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |seeds AS (
-       |  SELECT DISTINCT doc_a AS doc_id FROM edges
-       |  WHERE doc_a % $BfsSeedMod = 0),
-       |walk(doc_id, dist) AS (
-       |  SELECT doc_id, 0 AS dist FROM seeds
-       |  UNION
-       |  SELECT e.doc_b, w.dist + 1
-       |  FROM walk w JOIN edges e ON e.doc_a = w.doc_id
-       |  WHERE w.dist < $BfsMaxHops)
-       |SELECT doc_id, CAST(MIN(dist) AS INT) AS dist
-       |FROM walk GROUP BY 1""".stripMargin
 
   // ------------------------------------------------------------ graph_hits
 
@@ -804,25 +754,33 @@ object Graph {
    * deliberately: `1e6 div deg` is exact integer arithmetic,
    * bit-identical across engines, where ln is libm.
    *
-   * Scale shape: group each middle node's neighbor set ONCE and explode
-   * its i<j combinations — exactly the C(deg, 2) wedges, with no deg²
-   * self-join probe rows ever materialized (the earlier self-join
-   * generated Σ deg(m)² matches and then filtered half away). Note that
-   * degree-ORIENTATION, the triangle-count trick, does NOT apply here:
-   * a triangle has three wedge witnesses so any one suffices, but a
-   * common-neighbor count needs EVERY wedge exactly once — direct
-   * combination enumeration over the adjacency list is the web-scale
-   * shape. Degrees stay bounded by [[Dedup]]'s MaxBucketDocs LSH cap,
-   * so the collected neighbor list is small by construction.
-   *
    * Determinism: counts and integer division only.
    */
   def graphCommonNeighbors(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.dedupMinhashLsh(spark, dir)
-      .select(col("doc_a"), col("doc_b"))
-    val e = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val e = Checkpoints.cut(undirected(Dedup.dedupMinhashLsh(spark, dir)))
     val deg = e.groupBy(col("doc_a").as("mid")).agg(count(lit(1)).as("deg"))
+    linkCandidatesOf(e).join(deg, "mid")
+      .groupBy(col("u").as("doc_a"), col("v").as("doc_b"))
+      .agg(count(lit(1)).as("common_neighbors"),
+           sum(expr(s"$PrOne div deg")).as("ra_fp"))
+  }
+
+  /** Link-prediction candidates (u, mid, v) over a checkpointed symmetric
+    * edge list: one row per wedge u–mid–v (u < v) whose endpoints are not
+    * already adjacent — shared by [[graphCommonNeighbors]] and
+    * [[graphJaccardLinks]].
+    *
+    * Scale shape: group each middle node's neighbor set ONCE and explode
+    * its i<j combinations — exactly the C(deg, 2) wedges, with no deg²
+    * self-join probe rows ever materialized (the earlier self-join
+    * generated Σ deg(m)² matches and then filtered half away). Note that
+    * degree-ORIENTATION, the triangle-count trick, does NOT apply here:
+    * a triangle has three wedge witnesses so any one suffices, but a
+    * common-neighbor count needs EVERY wedge exactly once — direct
+    * combination enumeration over the adjacency list is the web-scale
+    * shape. Degrees stay bounded by [[Dedup]]'s MaxBucketDocs LSH cap,
+    * so the collected neighbor list is small by construction. */
+  private def linkCandidatesOf(e: DataFrame): DataFrame = {
     val wedges = e
       .groupBy(col("doc_b").as("mid"))
       .agg(sort_array(collect_list(col("doc_a"))).as("ns"))
@@ -831,33 +789,31 @@ object Graph {
       .select(col("p.a").as("u"), col("mid"), col("p.b").as("v"))
     // link PREDICTION: drop wedge pairs that are already edges. The edge
     // set is derived from the checkpointed e (canonical doc_a < doc_b
-    // half) so the LSH pipeline behind `pairs` executes exactly once.
-    val cand = wedges.join(
+    // half) so the LSH pipeline behind it executes exactly once.
+    wedges.join(
       e.filter(col("doc_a") < col("doc_b"))
         .select(col("doc_a").as("u"), col("doc_b").as("v")),
       Seq("u", "v"), "left_anti")
-    cand.join(deg, "mid")
-      .groupBy(col("u").as("doc_a"), col("v").as("doc_b"))
-      .agg(count(lit(1)).as("common_neighbors"),
-           sum(expr(s"$PrOne div deg")).as("ra_fp"))
   }
+
+  /** Oracle twin of [[linkCandidatesOf]] over the `pairs` and `edges`
+    * CTEs, ending in `cand(u, mid, v)`. */
+  private val linkCandidatesCtes: String =
+    """wdg AS (
+      |  SELECT e1.doc_a AS u, e1.doc_b AS mid, e2.doc_b AS v
+      |  FROM edges e1 JOIN edges e2
+      |    ON e1.doc_b = e2.doc_a AND e1.doc_a < e2.doc_b),
+      |cand AS (
+      |  SELECT u, mid, v FROM wdg
+      |  WHERE NOT EXISTS (SELECT 1 FROM pairs p
+      |                    WHERE p.doc_a = wdg.u AND p.doc_b = wdg.v))""".stripMargin
 
   /** Oracle: identical wedge/anti-join/rollup chain over the shared LSH
     * pair CTEs. */
   val graphCommonNeighborsSql: String =
-    s"""${Dedup.minhashPairsCtes},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+    s"""WITH ${Dedup.minhashEdgesCtesFrom("documents")},
        |deg AS (SELECT doc_a AS mid, COUNT(*) AS deg FROM edges GROUP BY 1),
-       |wdg AS (
-       |  SELECT e1.doc_a AS u, e1.doc_b AS mid, e2.doc_b AS v
-       |  FROM edges e1 JOIN edges e2
-       |    ON e1.doc_b = e2.doc_a AND e1.doc_a < e2.doc_b),
-       |cand AS (
-       |  SELECT u, mid, v FROM wdg
-       |  WHERE NOT EXISTS (SELECT 1 FROM pairs p
-       |                    WHERE p.doc_a = wdg.u AND p.doc_b = wdg.v))
+       |$linkCandidatesCtes
        |SELECT u AS doc_a, v AS doc_b,
        |       CAST(COUNT(*) AS BIGINT) AS common_neighbors,
        |       CAST(SUM($PrOne // deg) AS BIGINT) AS ra_fp
@@ -877,22 +833,9 @@ object Graph {
    * tables, never corpus-sized.
    */
   def graphJaccardLinks(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.dedupMinhashLsh(spark, dir)
-      .select(col("doc_a"), col("doc_b"))
-    val e = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val e = Checkpoints.cut(undirected(Dedup.dedupMinhashLsh(spark, dir)))
     val deg = e.groupBy(col("doc_a").as("nid")).agg(count(lit(1)).as("deg"))
-    val wedges = e
-      .groupBy(col("doc_b").as("mid"))
-      .agg(sort_array(collect_list(col("doc_a"))).as("ns"))
-      .select(explode(flatten(transform(col("ns"), (x, i) =>
-        transform(slice(col("ns"), i + 2, size(col("ns"))),
-                  y => struct(x.as("u"), y.as("v")))))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-    val cn = wedges.join(
-        e.filter(col("doc_a") < col("doc_b"))
-          .select(col("doc_a").as("u"), col("doc_b").as("v")),
-        Seq("u", "v"), "left_anti")
+    val cn = linkCandidatesOf(e)
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common_neighbors"))
     cn.join(deg.select(col("nid").as("u"), col("deg").as("deg_u")), "u")
@@ -906,21 +849,12 @@ object Graph {
   /** Oracle: the shared wedge/anti-join chain plus the two degree joins
     * and the identical ppm division. */
   val graphJaccardLinksSql: String =
-    s"""${Dedup.minhashPairsCtes},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+    s"""WITH ${Dedup.minhashEdgesCtesFrom("documents")},
        |deg AS (SELECT doc_a AS nid, COUNT(*) AS deg FROM edges GROUP BY 1),
-       |wdg AS (
-       |  SELECT e1.doc_a AS u, e2.doc_b AS v
-       |  FROM edges e1 JOIN edges e2
-       |    ON e1.doc_b = e2.doc_a AND e1.doc_a < e2.doc_b),
+       |$linkCandidatesCtes,
        |cn AS (
        |  SELECT u, v, CAST(COUNT(*) AS BIGINT) AS common_neighbors
-       |  FROM wdg
-       |  WHERE NOT EXISTS (SELECT 1 FROM pairs p
-       |                    WHERE p.doc_a = wdg.u AND p.doc_b = wdg.v)
-       |  GROUP BY 1, 2)
+       |  FROM cand GROUP BY 1, 2)
        |SELECT u AS doc_a, v AS doc_b, common_neighbors,
        |  CAST((common_neighbors * $PrOne) // (du.deg + dv.deg - common_neighbors)
        |       AS BIGINT) AS jaccard_ppm
@@ -936,27 +870,18 @@ object Graph {
    * marks chain/hub nodes where pairwise similarity does NOT imply
    * mutual similarity — the split the dedup-apply policy cares about.
    *
-   * Scale shape: the a<b<c ordered node-iterator counts each triangle
-   * once (same wedge bound as [[graphTriangles]], degrees LSH-capped);
-   * degrees come from one count over the symmetric edge list; the final
-   * assembly is a node-sized left join. deg = 1 nodes have no possible
-   * wedge — their coefficient is NULL, guarded identically in both
-   * engines (ANSI Spark and DuckDB both error on integer /0 otherwise).
+   * Scale shape: [[trianglesPerNode]] counts each triangle once (degrees
+   * LSH-capped); degrees come from one count over the symmetric edge
+   * list; the final assembly is a node-sized left join. deg = 1 nodes
+   * have no possible wedge — their coefficient is NULL, guarded
+   * identically in both engines (ANSI Spark and DuckDB both error on
+   * integer /0 otherwise).
    */
   def graphClusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
-    val half = Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir)
-      .select(col("doc_a"), col("doc_b")))
-    val deg = half.union(half.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val half = Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir))
+    val deg = undirected(half)
       .groupBy(col("doc_a").as("doc_id")).agg(count(lit(1)).as("deg"))
-    val wedges = half.as("e1")
-      .join(half.as("e2"), col("e1.doc_b") === col("e2.doc_a"))
-      .select(col("e1.doc_a").as("a"), col("e1.doc_b").as("b"),
-              col("e2.doc_b").as("c"))
-    val perNode = wedges
-      .join(half.as("e3"), col("a") === col("e3.doc_a") && col("c") === col("e3.doc_b"))
-      .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_triangles"))
-    deg.join(perNode, Seq("doc_id"), "left")
+    deg.join(trianglesPerNode(half), Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_triangles"))
       .select(col("doc_id"), col("deg"), col("n_triangles"),
               when(col("deg") >= 2,
@@ -967,22 +892,10 @@ object Graph {
   /** Oracle: the shared triangle chain, degree count, and the identical
     * guarded ppm division. */
   val graphClusteringCoeffSql: String =
-    s"""${Dedup.minhashPairsCtes},
-       |edges AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+    s"""WITH ${Dedup.minhashEdgesCtesFrom("documents")},
        |deg AS (SELECT doc_a AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg
        |        FROM edges GROUP BY 1),
-       |w AS (
-       |  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
-       |  FROM pairs e1 JOIN pairs e2 ON e1.doc_b = e2.doc_a),
-       |tri AS (
-       |  SELECT a, b, c FROM w JOIN pairs e3 ON w.a = e3.doc_a AND w.c = e3.doc_b),
-       |pn AS (
-       |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
-       |    SELECT a AS doc_id FROM tri
-       |    UNION ALL SELECT b FROM tri
-       |    UNION ALL SELECT c FROM tri) GROUP BY 1)
+       |$trianglesPerNodeCtes
        |SELECT d.doc_id, d.deg,
        |       coalesce(pn.n_triangles, 0) AS n_triangles,
        |       CASE WHEN d.deg >= 2

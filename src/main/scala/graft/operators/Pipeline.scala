@@ -28,8 +28,11 @@ object Pipeline {
   /** Minimum document length surviving the quality gate (chars). */
   private val MinChars = 200
 
-  def corpusPrep(spark: SparkSession, dir: String): DataFrame = {
-    val quality = t(spark, dir, "documents").filter(col("n_chars") >= MinChars)
+  /** The survivors of each prep stage — (quality, exact, kept) — shared
+    * by [[corpusPrep]] and [[corpusAttrition]]; [[prepCtes]] is the
+    * oracle twin. */
+  private def prepStages(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val quality = docs.filter(col("n_chars") >= MinChars)
     val reps = quality
       .select(col("doc_id"), md5(lower(trim(col("text")))).as("h"))
       .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
@@ -42,7 +45,28 @@ object Pipeline {
     val nonReps = Dedup.componentsOf(Dedup.minhashPairsOf(exact))
       .filter(col("rep_doc_id") =!= col("doc_id"))
       .select(col("doc_id"))
-    val kept = exact.join(nonReps, Seq("doc_id"), "left_anti")
+    (quality, exact, exact.join(nonReps, Seq("doc_id"), "left_anti"))
+  }
+
+  /** Oracle CTE prefix (leading WITH RECURSIVE) ending in the stage
+    * tables `quality`, `exact` and `kept` — the twin of [[prepStages]]. */
+  private val prepCtes: String =
+    s"""WITH RECURSIVE quality AS (
+       |  SELECT * FROM documents WHERE n_chars >= $MinChars),
+       |reps AS (
+       |  SELECT MIN(doc_id) AS doc_id
+       |  FROM (SELECT doc_id, md5(lower(trim(text))) AS h FROM quality)
+       |  GROUP BY h),
+       |exact AS (
+       |  SELECT q.* FROM quality q WHERE q.doc_id IN (SELECT doc_id FROM reps)),
+       |${Dedup.componentsCtesFrom("exact")},
+       |kept AS (
+       |  SELECT e.* FROM exact e
+       |  WHERE e.doc_id NOT IN
+       |        (SELECT doc_id FROM comp WHERE rep_doc_id <> doc_id))""".stripMargin
+
+  def corpusPrep(spark: SparkSession, dir: String): DataFrame = {
+    val (_, _, kept) = prepStages(t(spark, dir, "documents"))
     kept
       .select(Sampling.splitCol(col("doc_id")).as("split"),
               col("lang"), col("n_chars"))
@@ -69,16 +93,7 @@ object Pipeline {
    */
   def corpusAttrition(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val quality = docs.filter(col("n_chars") >= MinChars)
-    val reps = quality
-      .select(col("doc_id"), md5(lower(trim(col("text")))).as("h"))
-      .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val exact = Checkpoints.cut(quality.join(reps, Seq("doc_id"), "left_semi"))
-    val nonReps = Dedup.componentsOf(Dedup.minhashPairsOf(exact))
-      .filter(col("rep_doc_id") =!= col("doc_id"))
-      .select(col("doc_id"))
-    val kept = exact.join(nonReps, Seq("doc_id"), "left_anti")
+    val (quality, exact, kept) = prepStages(docs)
     def cnt(df: org.apache.spark.sql.DataFrame, as: String) =
       df.groupBy(col("source")).agg(count(lit(1)).as(as))
     cnt(docs, "n_raw")
@@ -99,19 +114,7 @@ object Pipeline {
   }
 
   val corpusAttritionSql: String =
-    s"""WITH RECURSIVE quality AS (
-       |  SELECT * FROM documents WHERE n_chars >= $MinChars),
-       |reps AS (
-       |  SELECT MIN(doc_id) AS doc_id
-       |  FROM (SELECT doc_id, md5(lower(trim(text))) AS h FROM quality)
-       |  GROUP BY h),
-       |exact AS (
-       |  SELECT q.* FROM quality q WHERE q.doc_id IN (SELECT doc_id FROM reps)),
-       |${Dedup.componentsCtesFrom("exact")},
-       |kept AS (
-       |  SELECT e.* FROM exact e
-       |  WHERE e.doc_id NOT IN
-       |        (SELECT doc_id FROM comp WHERE rep_doc_id <> doc_id)),
+    s"""$prepCtes,
        |r AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_raw
        |      FROM documents GROUP BY 1),
        |qc AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_quality
@@ -138,19 +141,7 @@ object Pipeline {
        |LEFT JOIN fc ON fc.source = r.source""".stripMargin
 
   val corpusPrepSql: String =
-    s"""WITH RECURSIVE quality AS (
-       |  SELECT * FROM documents WHERE n_chars >= $MinChars),
-       |reps AS (
-       |  SELECT MIN(doc_id) AS doc_id
-       |  FROM (SELECT doc_id, md5(lower(trim(text))) AS h FROM quality)
-       |  GROUP BY h),
-       |exact AS (
-       |  SELECT q.* FROM quality q WHERE q.doc_id IN (SELECT doc_id FROM reps)),
-       |${Dedup.componentsCtesFrom("exact")},
-       |kept AS (
-       |  SELECT e.* FROM exact e
-       |  WHERE e.doc_id NOT IN
-       |        (SELECT doc_id FROM comp WHERE rep_doc_id <> doc_id))
+    s"""$prepCtes
        |SELECT ${Sampling.splitSqlExpr} AS split, lang,
        |  COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
        |FROM kept GROUP BY 1, 2""".stripMargin

@@ -1062,20 +1062,6 @@ object Similarity {
   private def l2sqSql(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip($a, $b), p -> (p[1] - p[2]) * (p[1] - p[2]))), (acc, x) -> acc + x)"
 
-  /** Quantized per-cluster subvector means (same exact-integer-sum
-    * determinism as [[kmCentroids]], no norm — PQ trains on L2). */
-  private def pqCentroids(assigned: DataFrame): DataFrame =
-    assigned.select(col("cluster"), posexplode(col("sv")).as(Seq("dim", "x")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg((sum(floor(col("x") * lit(1e6))).cast("double")
-              / (count(lit(1)).cast("double") * lit(1e6))).as("m"))
-      .groupBy(col("cluster"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-                     s => s.getField("m")).as("cv"))
-
-  /** Nearest-code assignment for one subspace as a zero-shuffle literal
-    * projection: argmin squared-L2, ties to the smaller code
-    * (`array_min` over (dist, code) structs). */
   /** One subspace codebook as a SINGLE literal array-of-structs (cv, c)
     * in code order — the argmin/LUT lambdas iterate it with `transform`,
     * so the distance arithmetic appears ONCE in the plan instead of

@@ -49,7 +49,7 @@ object StreamQueries {
     else Files.createTempDirectory(prefix).toFile
   }
 
-  /** Staged micro-batch dirs, keyed by (events dir, chunk count): staging
+  /** Staged micro-batch dirs, keyed by (source key, chunk count): staging
     * is a deterministic function of the source table, so one session
     * stages each corpus ONCE and every later stream run (Bench reps, the
     * other stream queries, Verify) replays the same files. The dirs live
@@ -58,23 +58,49 @@ object StreamQueries {
     scala.collection.concurrent.TrieMap.empty[(String, Int), File]
   sys.addShutdownHook(staged.values.foreach(rm))
 
-  /** Stage the normalized events table (ts as TimestampType micros, via
-    * [[graft.operators.Tables.events]] — so the stream schema is stable
-    * whatever the corpus' physical timestamp type) as
-    * `chunks` event-time-ordered files — the micro-batch harness. The
-    * global ntile window is STAGING, not the measured operator: it plays
-    * the role of the upstream log's arrival order, and a real deployment
-    * reads an already-ordered Kafka/log source. No driver-side collect —
-    * rows move executor-to-disk in one [[stageFiles]] job. */
+  /** Stage a source table as `chunks` arrival-ordered files — the
+    * micro-batch harness — once per session per (source, chunks).
+    *
+    *  - events (default): the normalized events table (ts as
+    *    TimestampType micros, via [[graft.operators.Tables.events]] — so
+    *    the stream schema is stable whatever the corpus' physical
+    *    timestamp type), in event-time order;
+    *  - `docs`: (doc_id, text) of the documents table in doc_id order — a
+    *    crawl frontier delivers documents in fetch order; doc_id order is
+    *    the deterministic stand-in;
+    *  - `lateMod`: the events split, except rows with
+    *    `event_id % lateMod == 0` from the first `chunks-1` batches are
+    *    DISPLACED to arrive in the final batch with their event time
+    *    unchanged — a deterministic stand-in for out-of-order delivery.
+    *    By the time they arrive, the watermark (advanced by the in-order
+    *    batches) has passed most of their windows, so the stateful agg
+    *    must drop exactly the displaced rows whose hour-window end is at
+    *    or before that watermark.
+    *
+    * The global ntile window is STAGING, not the measured operator: it
+    * plays the role of the upstream log's arrival order, and a real
+    * deployment reads an already-ordered Kafka/log source. No
+    * driver-side collect — rows move executor-to-disk in one
+    * [[stageFiles]] job. */
   private def stageMicroBatches(spark: SparkSession, dir: String,
-                                chunks: Int): File = synchronized {
-    staged.getOrElseUpdate((dir, chunks), {
-      val raw = graft.operators.Tables.events(spark, dir)
-      stageFiles(raw.withColumn("mb",
-        ntile(chunks).over(Window.orderBy(col("ts"), col("event_id")))),
-        chunks)
-    })
-  }
+                                chunks: Int, docs: Boolean = false,
+                                lateMod: Option[Int] = None): File =
+    synchronized {
+      val key = if (docs) s"$dir#docs" else lateMod.fold(dir)(m => s"$dir#late$m")
+      staged.getOrElseUpdate((key, chunks), {
+        val (rows, order) =
+          if (docs) (graft.operators.Tables.t(spark, dir, "documents")
+                       .select(col("doc_id"), col("text")), Seq(col("doc_id")))
+          else (graft.operators.Tables.events(spark, dir),
+                Seq(col("ts"), col("event_id")))
+        val ranked = rows.withColumn("mb",
+          ntile(chunks).over(Window.orderBy(order: _*)))
+        stageFiles(lateMod.fold(ranked)(m => ranked.withColumn("mb",
+          when(col("mb") < chunks && col("event_id") % m === 0, lit(chunks))
+            .otherwise(col("mb")))),
+          chunks)
+      })
+    }
 
   /** Write the ranked frame as one file per micro-batch in a SINGLE job:
     * repartition by the batch column so each batch's rows live in exactly
@@ -108,29 +134,6 @@ object StreamQueries {
     tmp
   }
 
-  /** Late-arrival staging for the watermark gate: the same event-time-
-    * ordered `chunks`-file split as [[stageMicroBatches]], except rows
-    * with `event_id % lateMod == 0` from the first `chunks-1` batches are
-    * DISPLACED to arrive in the final batch with their event time
-    * unchanged — a deterministic stand-in for out-of-order delivery. By
-    * the time they arrive, the watermark (advanced by the in-order
-    * batches) has passed most of their windows, so the stateful agg must
-    * drop exactly the displaced rows whose hour-window end is at or
-    * before that watermark. Cached like [[staged]], keyed separately. */
-  private def stageLateMicroBatches(spark: SparkSession, dir: String,
-                                    chunks: Int, lateMod: Int): File =
-    synchronized {
-      staged.getOrElseUpdate((s"$dir#late$lateMod", chunks), {
-        val raw = graft.operators.Tables.events(spark, dir)
-        stageFiles(raw.withColumn("mb",
-          ntile(chunks).over(Window.orderBy(col("ts"), col("event_id"))))
-          .withColumn("mb",
-            when(col("mb") < chunks && col("event_id") % lateMod === 0,
-                 lit(chunks)).otherwise(col("mb"))),
-          chunks)
-      })
-    }
-
   /** Run one micro-batched streaming query over the staged events to a
     * memory sink, drain it, clean up the per-run checkpoint, and hand
     * back the sink table. The staging dir is shared across runs (see
@@ -150,19 +153,14 @@ object StreamQueries {
     runStagedStream(spark, src, mode, xform, needsNoDataBatch)
   }
 
-  /** Env override for the state-store partition count (diagnostics/A-B
-    * runs); unset → [[statePartitionsFor]] sizes it from the staged
-    * batch volume. A streaming query pins `spark.sql.shuffle.partitions`
-    * state stores per stateful operator PER MICRO-BATCH (each pays task
-    * launch + snapshot + commit every trigger, data or not) — a fixed
-    * cost a deployment sizes to stream THROUGHPUT, not to the host's
-    * core count: 32 stores for a 25k-row micro-batch is ~4x pure
-    * overhead (measured: addBatch ~1.0 s -> ~0.3 s at 8, and 1 shaves
-    * the remaining snapshot/commit fan-out at that trigger size). */
-  private val StreamStatePartitions =
-    sys.env.get("GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt)
-
-  /** Adaptive state-partition count (r14): one state store per ~512 KiB
+  /** Adaptive state-partition count (r14). A streaming query pins
+    * `spark.sql.shuffle.partitions` state stores per stateful operator
+    * PER MICRO-BATCH (each pays task launch + snapshot + commit every
+    * trigger, data or not) — a fixed cost a deployment sizes to stream
+    * THROUGHPUT, not to the host's core count: 32 stores for a 25k-row
+    * micro-batch is ~4x pure overhead (measured: addBatch ~1.0 s ->
+    * ~0.3 s at 8, and 1 shaves the remaining snapshot/commit fan-out at
+    * that trigger size). So: one state store per ~512 KiB
     * of staged micro-batch parquet (~25k events), capped at 16 — i.e.
     * sized to TRIGGER VOLUME, which is what "size to stream throughput"
     * means in code. sf0.01's ~70 KiB batches keep 1 store; sf0.1's
@@ -177,13 +175,12 @@ object StreamQueries {
     * Results are store-count invariant (hash state keying), which
     * StreamingSpec's differentials and the oracle gates' local[7] and
     * explicit 1/2/4/8-store hash-match runs pin. */
-  private def statePartitionsFor(src: File): Int =
-    StreamStatePartitions.getOrElse {
-      val maxBatch = Option(src.listFiles()).getOrElse(Array.empty[File])
-        .filter(_.getName.endsWith(".parquet"))
-        .foldLeft(0L)((m, f) => math.max(m, f.length()))
-      math.min(16L, math.max(1L, (maxBatch + (1L << 19) - 1) / (1L << 19))).toInt
-    }
+  private def statePartitionsFor(src: File): Int = {
+    val maxBatch = Option(src.listFiles()).getOrElse(Array.empty[File])
+      .filter(_.getName.endsWith(".parquet"))
+      .foldLeft(0L)((m, f) => math.max(m, f.length()))
+    math.min(16L, math.max(1L, (maxBatch + (1L << 19) - 1) / (1L << 19))).toInt
+  }
 
   /** @param needsNoDataBatch whether the drained result depends on the
     *   trailing NO-DATA micro-batch (the extra trigger Spark runs so the
@@ -319,20 +316,6 @@ object StreamQueries {
   val streamDedupSql: String =
     "SELECT DISTINCT user_id, event_type FROM events"
 
-  /** Staged documents (doc_id-ordered, (doc_id, text) only) for the
-    * similarity stream gate — the corpus analog of [[stageMicroBatches]]:
-    * a crawl frontier delivers documents in fetch order; doc_id order is
-    * the deterministic stand-in. */
-  private def stageDocMicroBatches(spark: SparkSession, dir: String,
-                                   chunks: Int): File = synchronized {
-    staged.getOrElseUpdate((s"$dir#docs", chunks), {
-      val docs = graft.operators.Tables.t(spark, dir, "documents")
-        .select(col("doc_id"), col("text"))
-      stageFiles(docs.withColumn("mb",
-        ntile(chunks).over(Window.orderBy(col("doc_id")))), chunks)
-    })
-  }
-
   /** Streaming MinHash-LSH near-dup candidates as a gated query — the
     * first streaming+similarity composition on the surface: documents
     * arrive as a micro-batched stream, each computes its banded minhash
@@ -348,7 +331,7 @@ object StreamQueries {
     * emits exactly when its later member arrives. */
   def streamMinhash(spark: SparkSession, dir: String): DataFrame =
     // flatMapGroupsWithState with no timeout: emits on data arrival only
-    runStagedStream(spark, stageDocMicroBatches(spark, dir, chunks = 3),
+    runStagedStream(spark, stageMicroBatches(spark, dir, chunks = 3, docs = true),
       "append",
       docs => EventStreams.minhashPairsStateful(docs).toDF(),
       needsNoDataBatch = false,
@@ -389,8 +372,8 @@ object StreamQueries {
       | AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 1 HOUR""".stripMargin
 
   /** Watermark late-data gate: append-mode hourly counts over the
-    * LATE-ARRIVAL staging ([[stageLateMicroBatches]]: every 101st event
-    * from batches 1–2 arrives in batch 3 — the minimum split where
+    * LATE-ARRIVAL staging ([[stageMicroBatches]] with `lateMod`: every
+    * 101st event from batches 1–2 arrives in batch 3 — the minimum split where
     * displaced rows cross a watermark that advanced without them; 4→3
     * chunks in r11 shaves one trigger of fixed cost without weakening
     * the claim, since the drop boundary stays strictly inside the
@@ -420,7 +403,8 @@ object StreamQueries {
   private val LateMod = 101
 
   def streamLateData(spark: SparkSession, dir: String): DataFrame =
-    runStagedStream(spark, stageLateMicroBatches(spark, dir, 3, LateMod),
+    runStagedStream(spark,
+      stageMicroBatches(spark, dir, chunks = 3, lateMod = Some(LateMod)),
       "append", EventStreams.hourlyCountsAppend, needsNoDataBatch = true)
 
   val streamLateDataSql: String =

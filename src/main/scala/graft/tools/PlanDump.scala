@@ -6,9 +6,10 @@ import java.nio.file.{Files, Paths}
  * Checked-in plan artifact (VERDICT r6 item 8): dumps the FORMATTED
  * physical plan of every gated query at sf0.001 to `docs/PLANS.md`, so a
  * judge can audit plan shapes (exchanges, pushed filters, codegen spans,
- * join strategies) without running Spark. Expression IDs, local paths
- * and JVM object identities are normalized out so regenerated dumps
- * are byte-identical.
+ * join strategies) without running Spark. Expression IDs, local paths,
+ * JVM object identities, RDD ids, lambda-variable suffixes and call-site
+ * line numbers are normalized out so regenerated dumps are byte-identical
+ * and a diff shows only real plan changes.
  *
  * Regenerate after plan-affecting changes:
  *   sbt "runMain graft.tools.PlanDump"
@@ -31,6 +32,12 @@ object PlanDump {
       // Foo$$$Lambda$6131/0x00007f...@2892ce86) differ on every run
       .replaceAll("\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$Lambda")
       .replaceAll("([\\w$;\\[]+)@[0-9a-f]{1,8}\\b", "$1@x")
+      // run-order counters and call-site lines (RDD[858], lambda x_134,
+      // Checkpoints.scala:59): one extra RDD, lambda or source line
+      // would otherwise renumber every later plan
+      .replaceAll("RDD\\[\\d+\\]", "RDD[x]")
+      .replaceAll("\\.scala:\\d+", ".scala:x")
+      .replaceAll("lambda (\\w+?)_\\d+#", "lambda $1_x#")
 
     val sb = new StringBuilder
     sb.append("# Physical plans of every gated query (sf0.001)\n\n")
